@@ -298,9 +298,12 @@ object Bench {
         }
       }
       .take(10) // bound the tail work on a fully-poisoned capture
-      .filter(_ => !breach("cross-flag reruns", 1.0))
       .map { case (n, prior, med) =>
-        val rerun = runOnce(n); spark.catalog.clearCache(); Pins.sweep(spark)
+        // the budget is checked before EACH rerun; a flag whose rerun
+        // is skipped stays in the artifact with rerun = -1
+        val rerun =
+          if (breach("cross-flag reruns", 1.0)) -1.0
+          else { val t = runOnce(n); spark.catalog.clearCache(); Pins.sweep(spark); t }
         (n, prior, med, rerun)
       }
 

@@ -1,11 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Io
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables
   * (see TESTDATA.md). Each table is one parquet file under
   * `<sfDir>/<name>.parquet`; scans stay declarative so Catalyst
-  * pushes projections and filters into the parquet reader.
+  * pushes projections and filters into the parquet reader. Every load
+  * goes through [[graft.sources.Io.readParquet]], so building a frame
+  * over an unchanged table fires no schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -14,7 +17,7 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else Io.readParquet(spark, s"$sfDir/$name.parquet")
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")
@@ -37,7 +40,7 @@ object Tables {
     // The NTZ → TimestampType branch below is only value-preserving under
     // a UTC session; pin it here rather than relying on each entry point.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = Io.readParquet(spark, s"$sfDir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       // `div` keeps the arithmetic in LongType: `/` would promote the
       // int64 epoch-nanos (~8.6e17 > 2^53) to double and round by ~64 ns.

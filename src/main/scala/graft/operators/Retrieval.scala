@@ -42,6 +42,12 @@ object Retrieval {
     * (standard BM25 drops query-side term frequency). A query doc with
     * the same id as a corpus doc is not excluded here; filter upstream
     * if self-matches are unwanted.
+    *
+    * Precondition: `idCol` values are unique in `docs`. Document
+    * frequency is derived from the per-(doc_id, term) tf rows, so two
+    * docs sharing an id count once in `df` and their postings merge
+    * into one tf row. This is not checked: a uniqueness check would
+    * cost a job.
     */
   def bm25TopK(
       docs: DataFrame,      // (id, text, ...)

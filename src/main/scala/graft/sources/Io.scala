@@ -10,12 +10,61 @@ import org.apache.spark.sql.types.StructType
   * split computation, schema inference, projection/filter pushdown and
   * parallel writes the reference hand-builds, so the engine surface is
   * a stable facade over `spark.read`/`df.write`. Explicit schemas are
-  * accepted (and preferred at scale — inference is an extra pass).
+  * accepted by the text-like readers.
+  *
+  * Parquet schemas are resolved once per file version: see
+  * [[readParquet]].
   */
 object Io {
 
+  /** Sorted (name, length, mtime) of the listed files, and the sorted
+    * parquet session confs. */
+  private type Fingerprint = (Seq[(String, Long, Long)], Seq[(String, String)])
+
+  /** Qualified path -> (fingerprint, inferred schema); one entry per
+    * path, replaced when the fingerprint changes. */
+  private val parquetSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Fingerprint, StructType)]
+
+  /** `spark.read.parquet(path)` without re-running schema inference
+    * (one Spark job per read, even for a single file) while the data is
+    * unchanged. The inferred schema is kept per qualified path under a
+    * fingerprint of the sorted (name, length, mtime) of
+    * `fs.listStatus(path)` plus every session conf whose key contains
+    * `parquet` (e.g. `binaryAsString`, `legacy.parquet.nanosAsLong`); a
+    * hit reads with `spark.read.schema(s)`, so listing, pushdown and
+    * pruning are as for an inferred read. Paths that cannot be listed
+    * as given (globs) and listings with a subdirectory (Hive-partitioned
+    * layouts; a top-level listing does not see nested changes) always
+    * infer. A file rewritten in place with the same name, length and
+    * mtime is not detected. There is no option to set.
+    */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    parquetFingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((key, fp)) => Option(parquetSchemas.get(key)) match {
+        case Some((`fp`, schema)) => spark.read.schema(schema).parquet(path)
+        case _ =>
+          val df = spark.read.parquet(path)
+          parquetSchemas.put(key, (fp, df.schema))
+          df
+      }
+    }
+
+  private def parquetFingerprint(spark: SparkSession, path: String)
+      : Option[(String, Fingerprint)] = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val listing = try fs.listStatus(p) catch { case _: java.io.IOException => return None }
+    if (listing.isEmpty || listing.exists(_.isDirectory)) None
+    else {
+      val files = listing.toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted
+      val confs = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+      Some((fs.makeQualified(p).toString, (files, confs)))
+    }
+  }
 
   def readCsv(spark: SparkSession, path: String, schema: StructType = null,
       header: Boolean = true): DataFrame = {
