@@ -33,6 +33,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * Driver traffic is O(partitions + fractions); every executor-side
   * structure is bounded by the partition size; the persisted single
   * double column spills to disk if it outgrows memory.
+  *
+  * A small input (estimated small, and at most 2^20 rows by a capped
+  * scan) skips the pipeline: its values are collected in one job and
+  * sorted on the driver, with the same order statistics and the same
+  * interpolation, so the result is the same to the bit.
   */
 object Quantiles {
 
@@ -51,11 +56,72 @@ object Quantiles {
     * traffic, same bounded executor memory.
     */
   def exactQuantilesMulti(df: DataFrame,
-      specs: Seq[(String, Seq[Double])]): Map[String, Seq[Double]] = Tuning.forSize(df) {
+      specs: Seq[(String, Seq[Double])]): Map[String, Seq[Double]] =
+    exactQuantilesMulti(df, specs, DriverSortRows)
+
+  /** Inputs of at most this many rows are sorted on the driver: one
+    * scan job instead of the range pipeline's sample, count and probe
+    * jobs. 2^20 doubles per column; the cap holds whatever the size
+    * estimate says. */
+  private val DriverSortRows = 1 << 20
+
+  /** [[exactQuantilesMulti]] with the driver-sort row cap as a
+    * parameter; 0 always takes the range-partitioned path. */
+  private[graft] def exactQuantilesMulti(df: DataFrame, specs: Seq[(String, Seq[Double])],
+      driverSortRows: Int): Map[String, Seq[Double]] = Tuning.forSize(df) {
     require(specs.nonEmpty, "at least one (column, fractions) spec")
     specs.foreach { case (c, fs) =>
       require(fs.nonEmpty && fs.forall(f => f >= 0.0 && f <= 1.0),
         s"fractions must be in [0,1] for $c: $fs") }
+    sortedOnDriver(df, specs.map(_._1), driverSortRows) match {
+      case Some(sorted) => specs.map { case (c, fractions) =>
+        val v = sorted(c)
+        if (v.isEmpty) throw new IllegalArgumentException(s"exactQuantiles($c): no non-null rows")
+        c -> targets(v.length, fractions).map { case (lo, hi, wgt) =>
+          interpolate(v(lo.toInt), v(hi.toInt), lo == hi, wgt)
+        }
+      }.toMap
+      case None => rangeQuantiles(df, specs)
+    }
+  }
+
+  /** Each column's values cast to double, nulls and NaNs dropped (as the
+    * range path's `na.drop` does), sorted; None unless the input is
+    * estimated small and holds at most `maxRows` rows. The estimate
+    * spares a large input the capped scan, and the cap bounds driver
+    * memory when the estimate is wrong. */
+  private def sortedOnDriver(df: DataFrame, cols: Seq[String],
+      maxRows: Int): Option[Map[String, Array[Double]]] = {
+    val values = df.select(cols.map(c => col(c).cast("double")): _*)
+    val estimate = scala.util.Try(values.queryExecution.optimizedPlan.stats.sizeInBytes)
+    if (maxRows <= 0 || !estimate.toOption.exists(_ <= BigInt(8L * maxRows * cols.size))) None
+    else {
+      val rows = values.limit(maxRows + 1).collect()
+      if (rows.length > maxRows) None
+      else Some(cols.zipWithIndex.map { case (c, i) =>
+        val v = rows.iterator.filter(!_.isNullAt(i)).map(_.getDouble(i)).filter(!_.isNaN).toArray
+        java.util.Arrays.sort(v)
+        c -> v
+      }.toMap)
+    }
+  }
+
+  /** The two order statistics around `p * (n - 1)` and the weight
+    * between them, per fraction. */
+  private def targets(n: Long, fractions: Seq[Double]): Seq[(Long, Long, Double)] =
+    fractions.map { p =>
+      val pos = p * (n - 1)
+      (math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
+    }
+
+  /** DuckDB's `lo + (hi - lo) * w`, the form the oracle replays. */
+  private def interpolate(a: Double, b: Double, same: Boolean, wgt: Double): Double =
+    if (same) a else a + (b - a) * wgt
+
+  /** The range-partitioned pipeline of the object doc, for any input
+    * size. */
+  private def rangeQuantiles(df: DataFrame,
+      specs: Seq[(String, Seq[Double])]): Map[String, Seq[Double]] = {
     val spark = df.sparkSession
     // Session shuffle parallelism (which Tuning.forSize just right-sized
     // for small inputs) also drives the range-partition count.
@@ -96,15 +162,12 @@ object Quantiles {
         val spans = tagCounts.scanLeft((0, 0L, 0L)) { case ((_, off, c), (pid, cnt)) =>
           (pid, off + c, cnt)
         }.drop(1)
-        val targets = fractions.map { p =>
-          val pos = p * (n - 1)
-          (p, math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
-        }
-        val probes = targets.flatMap(t => Seq(t._2, t._3)).distinct.map { g =>
+        val ts = targets(n, fractions)
+        val probes = ts.flatMap(t => Seq(t._1, t._2)).distinct.map { g =>
           val (pid, off, _) = spans.find { case (_, off, c) => off <= g && g < off + c }.get
           Probe(tag, g, pid, g - off + 1)
         }
-        (tag, targets, probes)
+        (tag, ts, probes)
       }
       val located = targetsByTag.flatMap(_._3)
       val neededPids = located.map(_.pid).distinct
@@ -129,10 +192,9 @@ object Quantiles {
         .select("__t", "__g", "__v")
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
-      targetsByTag.map { case (tag, targets, _) =>
-        tag -> targets.map { case (_, lo, hi, wgt) =>
-          val a = picked((tag, lo)); val b = picked((tag, hi))
-          if (lo == hi) a else a + (b - a) * wgt
+      targetsByTag.map { case (tag, ts, _) =>
+        tag -> ts.map { case (lo, hi, wgt) =>
+          interpolate(picked((tag, lo)), picked((tag, hi)), lo == hi, wgt)
         }
       }.toMap
     } finally tagged.unpersist(blocking = false)
@@ -186,15 +248,12 @@ object Quantiles {
         val spans = tagCounts.scanLeft((0, 0L, 0L)) { case ((_, off, c), (pid, cnt)) =>
           (pid, off + c, cnt)
         }.drop(1)
-        val targets = fractions.map { p =>
-          val pos = p * (n - 1)
-          (p, math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
-        }
-        val probes = targets.flatMap(t => Seq(t._2, t._3)).distinct.map { g =>
+        val ts = targets(n, fractions)
+        val probes = ts.flatMap(t => Seq(t._1, t._2)).distinct.map { g =>
           val (pid, off, _) = spans.find { case (_, off, c) => off <= g && g < off + c }.get
           Probe(tag, g, pid, g - off + 1)
         }
-        (tag, targets, probes)
+        (tag, ts, probes)
       }
       val located = targetsByTag.flatMap(_._3)
       val neededPids = located.map(_.pid).distinct
@@ -211,10 +270,9 @@ object Quantiles {
         .join(broadcast(lookupDf), Seq("__t", "__pid", "__rank"))
         .select("__t", "__g", "__v")
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      val out = targetsByTag.map { case (tag, targets, _) =>
-        Row.fromSeq(tag +: targets.map { case (_, lo, hi, wgt) =>
-          val a = picked((tag, lo)); val b = picked((tag, hi))
-          if (lo == hi) a else a + (b - a) * wgt
+      val out = targetsByTag.map { case (tag, ts, _) =>
+        Row.fromSeq(tag +: ts.map { case (lo, hi, wgt) =>
+          interpolate(picked((tag, lo)), picked((tag, hi)), lo == hi, wgt)
         })
       }
       val schema = StructType(

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import graft.sources.{Io, Layout}
@@ -16,37 +12,6 @@ import graft.sources.{Io, Layout}
 class IoSpec extends SparkSpec {
 
   private val dir = java.nio.file.Files.createTempDirectory("io_spec").toString
-
-  /** Spark jobs submitted by `body` on this thread. A marker job runs
-    * after it; the listener bus is ordered, so once the marker's start
-    * is seen every earlier job start has been delivered. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"io-spec-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == group) {
-          if (js.properties.getProperty("spark.job.description") == "marker")
-            marker.countDown()
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "io-spec")
-      body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job start never delivered")
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 

@@ -110,6 +110,36 @@ class QuantilesSpec extends SparkSpec {
       Quantiles.exactMedian(ords, "o_totalprice")) < 1e-9)
   }
 
+  test("a small input is sorted on the driver in one job, to the same bit as the range path") {
+    val li = Tables.lineitem(spark, sfDir)
+    val specs = Seq("l_quantity" -> Seq(0.25, 0.5, 0.75),
+      "l_extendedprice" -> Seq(0.1, 0.5, 0.9), "l_discount" -> Seq(0.0, 1.0))
+    val ranged = Quantiles.exactQuantilesMulti(li, specs, driverSortRows = 0)
+    var sorted = Map.empty[String, Seq[Double]]
+    assert(jobsDuring { sorted = Quantiles.exactQuantilesMulti(li, specs) } === 1)
+    assert(sorted === ranged)
+    // a cap below the row count falls back to the range path
+    assert(Quantiles.exactQuantilesMulti(li, specs, driverSortRows = 10) === ranged)
+  }
+
+  test("driver sort and range path agree with nulls, NaNs and many partitions (12 trials)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 12) {
+      val n = 1 + rnd.nextInt(400)
+      val rows = Seq.fill(n)(rnd.nextInt(6) match {
+        case 0 => (None, Some(rnd.nextInt(3).toDouble))
+        case 1 => (Some(Double.NaN), None)
+        case 2 => (Some(rnd.nextInt(4).toDouble), Some(-rnd.nextDouble()))
+        case _ => (Some(rnd.nextGaussian() * 1e3), Some(rnd.nextDouble()))
+      }) :+ ((Some(1.0), Some(1.0)))
+      val df = rows.toDF("a", "b").repartition(1 + rnd.nextInt(7))
+      val specs = Seq("a" -> Seq(0.0, rnd.nextDouble(), 0.5, 1.0), "b" -> Seq(rnd.nextDouble()))
+      assert(Quantiles.exactQuantilesMulti(df, specs) ===
+        Quantiles.exactQuantilesMulti(df, specs, driverSortRows = 0), s"trial $trial n=$n")
+    }
+  }
+
   test("quantile plans contain no unbounded percentile aggregate") {
     // The four rewired queries must never plan Spark's exact
     // percentile/median over a whole column (a TypedImperativeAggregate
