@@ -115,8 +115,10 @@ class QuantilesSpec extends SparkSpec {
     val specs = Seq("l_quantity" -> Seq(0.25, 0.5, 0.75),
       "l_extendedprice" -> Seq(0.1, 0.5, 0.9), "l_discount" -> Seq(0.0, 1.0))
     val ranged = Quantiles.exactQuantilesMulti(li, specs, driverSortRows = 0)
-    var sorted = Map.empty[String, Seq[Double]]
-    assert(jobsDuring { sorted = Quantiles.exactQuantilesMulti(li, specs) } === 1)
+    val (sorted, cost) = Explain.cost(spark)(Quantiles.exactQuantilesMulti(li, specs))
+    assert(cost.jobs === 1)
+    // the marker job's stage is excluded, so these are the sort job's own
+    assert(cost.stages >= 1 && cost.tasks >= 1, cost)
     assert(sorted === ranged)
     // a cap below the row count falls back to the range path
     assert(Quantiles.exactQuantilesMulti(li, specs, driverSortRows = 10) === ranged)

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,36 +8,9 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Spark jobs submitted by `body` on this thread. A marker job runs
-    * after it; the listener bus is ordered, so once the marker's start
-    * is seen every earlier job start has been delivered. */
-  protected def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-during-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == group) {
-          if (js.properties.getProperty("spark.job.description") == "marker")
-            marker.countDown()
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "jobs during")
-      body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job start never delivered")
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Spark jobs submitted by `body` on this thread ([[Explain.cost]]). */
+  protected def jobsDuring(body: => Unit): Int =
+    Explain.cost(spark)(body)._2.jobs
 }
 
 object SparkSpec {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.operators.TextDedup
 import graft.sources.Layout
 
@@ -46,27 +45,19 @@ class StagedFunnelSpec extends SparkSpec {
       // resume: file sets untouched, almost no jobs (only the report)
       val filesBefore = (1 to 4).map(n =>
         spark.table(s"${pfx}_s$n").inputFiles.toSet)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
+      var resumed = Seq.empty[(String, Long, Long, Long)]
+      val jobs = jobsDuring {
+        resumed = report(TextDedup.hygieneFunnelStaged(docs,
+          "doc_id", "source", "text", tablePrefix = pfx))
       }
-      spark.sparkContext.addSparkListener(listener)
-      val resumed =
-        try {
-          val r = report(TextDedup.hygieneFunnelStaged(docs,
-            "doc_id", "source", "text", tablePrefix = pfx))
-          Thread.sleep(500) // let queued JobStart events drain
-          r
-        } finally spark.sparkContext.removeSparkListener(listener)
       assert(resumed == inMem)
       val filesAfter = (1 to 4).map(n =>
         spark.table(s"${pfx}_s$n").inputFiles.toSet)
       assert(filesAfter == filesBefore, "resume rewrote a stage table")
       // the resumed run's only work is the single report aggregate (a
       // couple of AQE jobs); stage computation would schedule dozens
-      assert(jobs.get() <= 6,
-        s"resume scheduled ${jobs.get()} jobs — stage work was redone")
+      assert(jobs <= 6,
+        s"resume scheduled $jobs jobs — stage work was redone")
     } finally dropStage(pfx, 1, 2, 3, 4)
   }
 
